@@ -18,16 +18,23 @@ object Bench {
     catch { case _: Throwable => () }
     // deterministic name order: JVM warm-up distributes the same way
     // every run, so per-query times are comparable across rounds
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    // a query that throws is recorded as failed: its wall time is not a
+    // result, so it stays out of the per-query map and the total
+    val (results, failed) = SparkEntry.queries.toSeq.sortBy(_._1)
+      .partitionMap { case (name, fn) =>
+        val t0 = System.nanoTime()
+        try { fn(spark, sfDir).count(); Left(name -> (System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable =>
+          System.err.println(s"bench: $name failed: $e")
+          Right(name)
+        }
+      }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = results.map(_._2).sum
+    val failedJson = failed.map(k => s"\"" + k + "\"").mkString("[", ",", "]")
     val headline =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     // The single ~10 KB headline line has exceeded the driver's tail
     // capture every round ("parsed": null in BENCH_r01..r11 — the
     // driver keeps only ~3 KB of stdout tail, which ended mid-chunk).
@@ -53,6 +60,6 @@ object Bench {
     spark.stop()
     // LAST line on purpose: spark.stop() above flushes its own log
     // noise to stderr before this prints, and nothing else follows.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.length}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.length + failed.length},"n_failed":${failed.length}}""")
   }
 }

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.LocalGraph
 
 /** Text-analysis and deduplication operators for LLM-scale data
   * pipelines (SURVEY §7.1 step 8): tokenization, shingling, portable
@@ -383,21 +384,16 @@ object TextOps {
     * Deterministic: the component label IS the minimum node id.
     * Returns (node, cluster), one row per input-edge endpoint.
     *
-    * SCALE-ADAPTIVE EXECUTION (r11, guide §1.2/§5; hardened r12): the
-    * normalized distinct edge set — self-loops kept, so it carries the
-    * whole node universe — is materialized (and counted, one job over
-    * cached blocks) before the loop either way. When the count is at or
-    * under `spark.graft.cc.localEdgeLimit` (default 2^21; collected as
-    * primitive longs — see the heap math at the gate), the
-    * star loop collapses to a single driver-side union-find: the
-    * distributed loop's cost at that size is pure orchestration — the
-    * sf0.1 profile showed 70-130 serialized 1-2-task jobs of 30-400 ms
-    * each per CC gate, against milliseconds of actual union-find work —
-    * while past the limit (the sf10/sf100 dedup graphs, ~replica² edge
-    * growth) the loop runs exactly as before. This is the same
-    * adapt-from-actual-size contract AQE applies to join strategies,
-    * applied to the iteration driver; the label VALUES are identical
-    * by construction (min node id per component both ways). */
+    * Size-gated through [[graft.ops.LocalGraph]]: the normalized
+    * distinct edge set — self-loops kept, so it carries the whole node
+    * universe and bounds it by 2x the gated count — is checkpointed and
+    * counted; within the gate's limit the star loop collapses to one
+    * driver-side union-find, past it the loop below runs. Heap at the
+    * 2^21 default: 32 MB of edge longs + a <=4.2M-entry
+    * LongMap (~100 MB backing) + ids/parent (~50 MB) + output Rows for
+    * <=4.2M nodes (~180 MB transient) — under 400 MB against the 8 GB
+    * driver. The label VALUES are identical by construction (min node
+    * id per component both ways). */
   def connectedComponents(edges: org.apache.spark.sql.DataFrame,
                           maxIter: Int = 25): org.apache.spark.sql.DataFrame = {
     import graft.ops.Materialize.checkpointFresh
@@ -411,15 +407,15 @@ object TextOps {
         cbuf += "cc_edges" -> edges.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
     }
-    // r12: normalize WITHOUT dropping self-loops first, so the node
-    // universe (incl. self-loop-only nodes, which owe an output row
-    // labeled by themselves) derives from the CHECKPOINTED set — the
-    // old shape re-executed the full input edge lineage a second time
-    // for `nodes` (once per local collect, and again in the final join
-    // of the distributed path).
-    val (e0, e0Rdds) = checkpointFresh(
-      edges.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct())
+    // normalize WITHOUT dropping self-loops, so the node universe
+    // (incl. self-loop-only nodes, which owe an output row labeled by
+    // themselves) derives from the gated set and the input lineage runs
+    // once
+    val (e0, _) = LocalGraph.gate(edges.select(least(col("a"), col("b")).as("a"),
+      greatest(col("a"), col("b")).as("b")).distinct()) match {
+      case Left(chunks) => return localComponents(edges.sparkSession, chunks)
+      case Right(ck) => ck
+    }
     val nodes = e0.select(col("a").as("node"))
       .unionByName(e0.select(col("b").as("node"))).distinct()
     // one phase: hang the selected neighbors of each center u under
@@ -442,77 +438,6 @@ object TextOps {
               .select(col("m").as("a"), col("u").as("b")))
       kept.distinct()
     }
-    val spark = edges.sparkSession
-    val localLimit = spark.conf
-      .get("spark.graft.cc.localEdgeLimit", (1L << 21).toString).toLong
-    val bothLong = e0.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    // r12 (VERDICT #10 / ADVICE #1): the gate now counts the
-    // SELF-LOOP-INCLUSIVE normalized set, so the node universe is
-    // bounded by 2x the gated count — a self-loop-heavy input can no
-    // longer pass a small non-self edge count while collecting an
-    // unbounded node set. The collect is PRIMITIVE (flat long[] chunks,
-    // 16 bytes/edge), not boxed Rows (~10x that). Real heap math at
-    // the 2^21 default: 32 MB of edge longs + <=4.2M-entry LongMap
-    // (~100 MB backing) + ids/parent (~50 MB) + output Rows for <=4.2M
-    // nodes (~180 MB transient) — worst case under 400 MB against the
-    // 8 GB driver; the former 2^22-of-boxed-Rows default was ~1 GB+.
-    if (bothLong && e0.count() <= localLimit) {
-      // driver union-find (path halving) over the cached edge blocks
-      val chunks = graft.ops.Materialize.collectLongs(e0, 2)
-      e0Rdds.foreach(_.unpersist(blocking = false))
-      val nEst = chunks.iterator.map(_.length / 2).sum
-      val idx = new scala.collection.mutable.LongMap[Int](nEst * 2)
-      val ids = new scala.collection.mutable.ArrayBuffer[Long](nEst)
-      val parent = new scala.collection.mutable.ArrayBuffer[Int](nEst)
-      def nodeIdx(x: Long): Int = {
-        val existing = idx.getOrElse(x, -1)
-        if (existing >= 0) existing
-        else { val i = ids.length; idx(x) = i; ids += x; parent += i; i }
-      }
-      def find(x0: Int): Int = {
-        var x = x0
-        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-        x
-      }
-      chunks.foreach { arr =>
-        var r = 0
-        while (r < arr.length) {
-          val ia = nodeIdx(arr(r)); val ib = nodeIdx(arr(r + 1))
-          // a self-loop row only registers its node in the universe
-          if (arr(r) != arr(r + 1)) {
-            val ra = find(ia); val rb = find(ib)
-            if (ra != rb) parent(rb) = ra
-          }
-          r += 2
-        }
-      }
-      // label of a component = min node id over its members
-      val minOf = new Array[Long](ids.length)
-      java.util.Arrays.fill(minOf, Long.MaxValue)
-      var i = 0
-      while (i < ids.length) {
-        val root = find(i)
-        if (ids(i) < minOf(root)) minOf(root) = ids(i)
-        i += 1
-      }
-      val out = new Array[org.apache.spark.sql.Row](ids.length)
-      i = 0
-      while (i < ids.length) {
-        out(i) = org.apache.spark.sql.Row(ids(i), minOf(find(i)))
-        i += 1
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("cluster",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-        out.length / 65536 + 1))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toIndexedSeq, slices), schema)
-    }
-
     var e = e0.where(col("a") =!= col("b"))
     var prevRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
 
@@ -546,6 +471,45 @@ object TextOps {
     val centers = e.groupBy(col("b").as("node")).agg(min(col("a")).as("cluster"))
     nodes.join(centers, Seq("node"), "left")
       .select(col("node"), coalesce(col("cluster"), col("node")).as("cluster"))
+  }
+
+  /** [[connectedComponents]]' local kernel: union-find (path halving)
+    * over gated (a, b) chunks; a self-loop row only registers its node.
+    * Label of a component = min node id over its members. */
+  private def localComponents(spark: org.apache.spark.sql.SparkSession,
+                              chunks: Array[Array[Long]]): DataFrame = {
+    val nEst = chunks.iterator.map(_.length / 2).sum
+    val ix = new LocalGraph.NodeIndex(nEst)
+    val parent = new scala.collection.mutable.ArrayBuffer[Int](nEst)
+    def node(x: Long): Int = { val i = ix(x); if (i == parent.length) parent += i; i }
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    chunks.foreach { arr =>
+      var r = 0
+      while (r < arr.length) {
+        val ia = node(arr(r)); val ib = node(arr(r + 1))
+        if (ia != ib) {
+          val ra = find(ia); val rb = find(ib)
+          if (ra != rb) parent(rb) = ra
+        }
+        r += 2
+      }
+    }
+    val ids = ix.ids
+    val minOf = new Array[Long](ids.length)
+    java.util.Arrays.fill(minOf, Long.MaxValue)
+    var i = 0
+    while (i < ids.length) {
+      val root = find(i)
+      if (ids(i) < minOf(root)) minOf(root) = ids(i)
+      i += 1
+    }
+    val out = Array.tabulate(ids.length)(i => org.apache.spark.sql.Row(ids(i), minOf(find(i))))
+    val lt = org.apache.spark.sql.types.LongType
+    LocalGraph.frame(spark, out, "node" -> lt, "cluster" -> lt)
   }
 
   /** Dedup survivorship from a PRE-COMPUTED cluster table — the

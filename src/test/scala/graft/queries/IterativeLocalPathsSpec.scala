@@ -3,10 +3,11 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase.spark
 
-/** r12: the scale-adaptive local execution of the remaining iterative
-  * gates (t_sssp, t_bfs_dist, r_flow_accum — the
-  * connectedComponents treatment extended per the r11 verdict). Each
-  * test runs the SAME query through the driver-local path (default
+/** Both branches of every size-gated iterative operator
+  * ([[graft.ops.LocalGraph]]): connected components (through its
+  * t_dedup_clusters and r_region_label consumers), t_sssp, t_bfs_dist,
+  * t_kcore, r_flow_accum, r_basin_label and r_cost_distance. Each test
+  * runs the SAME query through the driver-local path (default
   * `spark.graft.iter.localEdgeLimit`) and the distributed loop
   * (limit = 0) and asserts bit-for-bit equal result sets, so the two
   * executions can never drift. The oracle gate then pins the shared
@@ -62,6 +63,18 @@ class IterativeLocalPathsSpec extends AnyFunSuite {
 
   test("costDistance: single-tile Dijkstra == tiled relaxation fixpoint") {
     val (local, dist) = runBoth("r_cost_distance")
+    assert(local.nonEmpty)
+    assert(local == dist)
+  }
+
+  test("t_dedup_clusters: local union-find == distributed star loop") {
+    val (local, dist) = runBoth("t_dedup_clusters")
+    assert(local.nonEmpty)
+    assert(local == dist)
+  }
+
+  test("r_region_label: local union-find == distributed star loop") {
+    val (local, dist) = runBoth("r_region_label")
     assert(local.nonEmpty)
     assert(local == dist)
   }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase.spark
 
@@ -21,11 +22,11 @@ class PersistedBlocksSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   /** Residual persistent-RDD growth of one extra query invocation. */
-  private def residual(name: String): Int = {
+  private def residual(name: String, s: SparkSession = spark): Int = {
     val fn = graft.SparkEntry.queries(name)
-    fn(spark, sf).count() // warm: fronts built, first-run residue paid
+    fn(s, sf).count() // warm: fronts built, first-run residue paid
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    fn(spark, sf).count()
+    fn(s, sf).count()
     val after = spark.sparkContext.getPersistentRDDs.keySet
     (after -- before).size
   }
@@ -44,6 +45,23 @@ class PersistedBlocksSpec extends AnyFunSuite {
   test("the local-path iterative gates leave zero persistent blocks") {
     for (name <- Seq("t_sssp", "t_bfs_dist", "t_kcore", "r_flow_accum", "r_basin_label"))
       assert(residual(name) == 0, s"$name leaked persistent RDDs")
+  }
+
+  test("the distributed loops (limit 0) keep only the checkpoints their plans read") {
+    // a child session isolates the conf flip (see IterativeLocalPathsSpec)
+    val s0 = spark.newSession()
+    s0.conf.set("spark.graft.iter.localEdgeLimit", "0")
+    // resident, per returned plan:
+    //   t_sssp, t_bfs_dist: the final dist table (the edge set and the
+    //     last frontier are freed);
+    //   r_basin_label: the final pointer table;
+    //   t_kcore: the edge set + the 4 lazily checkpointed survivor sets;
+    //   r_flow_accum: one frontier per peel round (4 on this field) + the
+    //     final partial table (the last `rem` edge set is freed)
+    val bound = Map("t_sssp" -> 1, "t_bfs_dist" -> 1, "r_basin_label" -> 1,
+      "t_kcore" -> 5, "r_flow_accum" -> 5)
+    for ((name, b) <- bound)
+      assert(residual(name, s0) <= b, s"$name leaked persistent RDDs")
   }
 
   test("connectedComponents (local path) leaves zero persistent blocks") {

@@ -53,14 +53,18 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   test("local union-find path and distributed star loop agree bit-for-bit") {
     // chains, a triangle, duplicate + reversed edges, and a node that
     // appears ONLY in a self-loop (owes an output row labeled by itself)
-    val edges = (Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L), (11L, 10L),
+    // a CHILD session isolates the conf flip from concurrently running
+    // suites (see IterativeLocalPathsSpec.runBoth); CC reads the limit
+    // from its input's session, so the edges live in the child
+    val s2 = spark.newSession()
+    val edges = s2.createDataFrame(Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L), (11L, 10L),
       (20L, 21L), (21L, 22L), (22L, 20L), (30L, 30L)) ++
       (100L until 160L).map(i => (i + 1, i))).toDF("a", "b")
     def run(): Map[Long, Long] =
       TextOps.connectedComponents(edges).as[(Long, Long)].collect().toMap
     val local = run() // default limit: takes the driver union-find path
-    spark.conf.set("spark.graft.cc.localEdgeLimit", "0")
-    val dist = try run() finally spark.conf.unset("spark.graft.cc.localEdgeLimit")
+    s2.conf.set("spark.graft.iter.localEdgeLimit", "0")
+    val dist = run()
     assert(local == dist)
     assert(local(30L) == 30L && local(4L) == 1L && local(160L) == 100L)
   }
