@@ -4,6 +4,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // scale factor as a JSON number, read from the `sfN` directory name
+    val sf = "^sf([0-9.]+)$".r.findFirstMatchIn(new java.io.File(sfDir).getName)
+      .flatMap(_.group(1).toDoubleOption).fold("null")(_.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -34,7 +37,7 @@ object Bench {
     val total = results.map(_._2).sum
     val failedJson = failed.map(k => s"\"" + k + "\"").mkString("[", ",", "]")
     val headline =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":$sf}"""
     // The single ~10 KB headline line has exceeded the driver's tail
     // capture every round ("parsed": null in BENCH_r01..r11 — the
     // driver keeps only ~3 KB of stdout tail, which ended mid-chunk).
@@ -60,6 +63,6 @@ object Bench {
     spark.stop()
     // LAST line on purpose: spark.stop() above flushes its own log
     // noise to stderr before this prints, and nothing else follows.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.length + failed.length},"n_failed":${failed.length}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":$sf,"cpus":$cpus,"n_queries":${results.length + failed.length},"n_failed":${failed.length}}""")
   }
 }

@@ -18,10 +18,14 @@ import graft.core.TileMath
   * and the kernel is embarrassingly parallel (SURVEY §7.4 hard part 1:
   * seams are exact because every cell samples through the same global
   * math regardless of which source tile contributed it).
+  *
+  * `SrcTileIn.cells` is `Array[Double]`, never `Seq[Double]`: the encoder
+  * decodes a `Seq` to a linked `List`, and every target cell indexes it
+  * (see [[graft.ops.TileAggregators]]).
   */
 object Reproject {
 
-  case class SrcTileIn(dstCol: Int, dstRow: Int, srcCol: Int, srcRow: Int, cells: Seq[Double])
+  case class SrcTileIn(dstCol: Int, dstRow: Int, srcCol: Int, srcRow: Int, cells: Array[Double])
 
   sealed trait Kernel extends Serializable
   case object NearestNeighbor extends Kernel
@@ -51,11 +55,11 @@ object Reproject {
                   // fractional source-cell coords of the target center
                   val fcx = (sx - src.extent.xmin) / src.cellWidth - sc * src.tileCols
                   val fcy = (src.extent.ymax - sy) / src.cellHeight - sr * src.tileRows
-                  TileMath.sampleBilinear(in.cells.toArray, src.tileCols, src.tileRows, fcx, fcy)
+                  TileMath.sampleBilinear(in.cells, src.tileCols, src.tileRows, fcx, fcy)
                 case CubicConvolution =>
                   val fcx = (sx - src.extent.xmin) / src.cellWidth - sc * src.tileCols
                   val fcy = (src.extent.ymax - sy) / src.cellHeight - sr * src.tileRows
-                  TileMath.sampleCubic(in.cells.toArray, src.tileCols, src.tileRows, fcx, fcy)
+                  TileMath.sampleCubic(in.cells, src.tileCols, src.tileRows, fcx, fcy)
               }
             }
           }

@@ -17,6 +17,11 @@ import graft.core.TileMath
   * buffer is a mutable primitive array, partials merge cell-wise, so a
   * 65k-pixel tile never materializes as 65k grouped rows (the reference's
   * `groupByKey` anti-pattern we deliberately avoid — SURVEY §4.2).
+  *
+  * Aggregator *inputs* that are indexed per cell must declare their cells
+  * `Array[Double]`, never `Seq[Double]`: the encoder decodes a `Seq` to a
+  * linked `List`, so `cells(i)` walks the list and assembling one 256x256
+  * tile becomes O(n^2); an `Array[Double]` decodes with one array copy.
   */
 object TileAggregators {
 
@@ -43,7 +48,7 @@ object TileAggregators {
     def outputEncoder: Encoder[Seq[Double]] = outEnc
   }
 
-  case class NeighborIn(dcol: Int, drow: Int, cells: Seq[Double])
+  case class NeighborIn(dcol: Int, drow: Int, cells: Array[Double])
 
   /** Halo exchange assembly: the target tile plus pad-wide margins of its
     * 8 neighbors → one padded (cols+2*pad) x (rows+2*pad) array. Input
@@ -84,7 +89,7 @@ object TileAggregators {
     def outputEncoder: Encoder[Seq[Double]] = outEnc
   }
 
-  case class QuadIn(qx: Int, qy: Int, cells: Seq[Double])
+  case class QuadIn(qx: Int, qy: Int, cells: Array[Double])
 
   /** Pyramid assembly: four downsampled child quadrants (each
     * cols/2 x rows/2, quadrant position qx, qy in 0..1) → parent tile. */

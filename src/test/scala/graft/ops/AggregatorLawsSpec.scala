@@ -168,4 +168,54 @@ class AggregatorLawsSpec extends AnyFunSuite {
       assert(agg.deserialize(agg.serialize(seq)).toSeq == seq.toSeq)
     }
   }
+
+  /** Encoder round trip of one aggregator input row: what Spark hands to
+    * `reduce` after decoding the shuffled row. */
+  private def roundTrip[T <: Product : scala.reflect.runtime.universe.TypeTag](v: T): T = {
+    val enc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[T]().resolveAndBind()
+    enc.createDeserializer()(enc.createSerializer()(v))
+  }
+
+  private def assertDecodedArray(cells: Any, expected: Array[Double]): Unit = cells match {
+    case a: Array[Double] => assert(bits(a) == bits(expected))
+    case other => fail(s"cells decoded as ${other.getClass.getName}, not Array[Double]")
+  }
+
+  private val bigTile: Array[Double] =
+    Array.tabulate(256 * 256)(i => if (i % 97 == 0) Double.NaN else i * 0.5 - 7.0)
+
+  test("per-cell indexed aggregator inputs decode as primitive arrays, not lists") {
+    // a Seq[Double] field decodes to a linked List, and per-cell indexing
+    // of it makes assembling one 256x256 tile O(n^2)
+    assertDecodedArray(roundTrip(TileAggregators.NeighborIn(-1, 1, bigTile)).cells, bigTile)
+    assertDecodedArray(roundTrip(TileAggregators.QuadIn(1, 0, bigTile)).cells, bigTile)
+    assertDecodedArray(roundTrip(graft.grid.Reproject.SrcTileIn(2, 3, 4, 5, bigTile)).cells, bigTile)
+  }
+
+  test("PadAssemble(256, 256, 3): self tile plus 8 margin slices equals a plain padded copy") {
+    val (cols, rows, pad) = (256, 256, 3)
+    // 3x3 mosaic of distinct tiles; the target is the centre one
+    val mw = 3 * cols
+    val mosaic = Array.tabulate(mw * 3 * rows)(i => if (i % 101 == 0) Double.NaN else i.toDouble)
+    def tile(dc: Int, dr: Int): Array[Double] =
+      Array.tabulate(cols * rows)(i => mosaic(((dc + 1) * cols + i % cols) + ((dr + 1) * rows + i / cols) * mw))
+    // the part of a neighbour's extent that the target's apron covers
+    def span(d: Int, n: Int): (Int, Int) = d match {
+      case -1 => (n - pad, n)
+      case 0 => (0, n)
+      case _ => (0, pad)
+    }
+    val agg = new TileAggregators.PadAssemble(cols, rows, pad)
+    val offsets = for (dr <- -1 to 1; dc <- -1 to 1) yield (dc, dr)
+    val padded = offsets.foldLeft(agg.zero) { case (b, (dc, dr)) =>
+      val (xlo, xhi) = span(dc, cols); val (ylo, yhi) = span(dr, rows)
+      val t = tile(dc, dr)
+      val slice = for (y <- ylo until yhi; x <- xlo until xhi) yield t(x + y * cols)
+      agg.reduce(b, TileAggregators.NeighborIn(dc, dr, slice.toArray))
+    }
+    val pc = cols + 2 * pad
+    val expected = Array.tabulate(pc * (rows + 2 * pad))(i =>
+      mosaic((cols - pad + i % pc) + (rows - pad + i / pc) * mw))
+    assert(bits(padded) == bits(expected))
+  }
 }
